@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * emits one JSON metric line for the driver (BENCH_r{N}.json). The FULL
   * per-query line goes ONLY to the SPARK_GRAFT_BENCH_OUT file (default
@@ -33,18 +31,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.tuned(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.GraftSession.mainCpus
+    val spark = graft.core.GraftSession.forMain("graft-bench")
     // parallelism evidence (VERDICT r17 #2): the driver's scaling probe
     // kept flagging `suspect_cpus_ignored` because nothing in the
     // emitted JSON proved the resolved core count — at sf0.1 the
     // per-query fixed overhead makes 8-core wall ≈ 32-core wall, which
     // is indistinguishable from "ignores the env var" from outside.
-    // `cpus` is the resolved SPARK_GRAFT_CPUS; `parallelism` is
+    // `cpus` is the validated core count; `parallelism` is
     // sc.defaultParallelism, the actual scheduler width AND the target
     // width Tables.fanOutForMapWork repartitions to (the
     // scaling-sensitive knob), measured from the live context.
@@ -245,7 +239,7 @@ object Bench {
     }.sorted
     val medianCpuRatio =
       if (cpuRatios.isEmpty) -1.0 else cpuRatios(cpuRatios.size / 2)
-    val loadCap = 0.25 * cpus.toInt // a quarter-busy machine is not quiet
+    val loadCap = 0.25 * cpus // a quarter-busy machine is not quiet
     val ratioCap = 1.15
     val disturbed = loadStart > loadCap ||
       (medianRatio > 0 && medianRatio > ratioCap)
@@ -338,17 +332,13 @@ object Bench {
     val failed = failedAll
       .map(n => "\"" + n + "\"").mkString("[", ",", "]")
     // one-time staged-artifact build costs (_SETUP_SECONDS, written by
-    // stagedStreamResult when it runs the REAL streaming query): folded
-    // into the tracked artifact so the amortized costs stay visible to
-    // consumers instead of living only in tmp-dir files (VERDICT r10 #6).
-    // Reads ONLY the dirs stagedStreamResult registered during THIS
-    // run — a blanket /tmp/graft_* scan also swept up stale dirs from
-    // prior code fingerprints and other corpora, accumulating and
-    // misattributing setup costs across rounds (ADVICE r11; superseded
-    // fingerprint dirs are now also GC'd at staging time).
+    // Staging.streamResult when it runs the real streaming query),
+    // folded into the tracked artifact. Reads only the dirs registered
+    // during this run, so stale dirs from other code fingerprints or
+    // corpora never enter the record.
     val setup = {
       import scala.jdk.CollectionConverters._
-      SparkEntry.stagedStreamDirsThisRun.asScala.toSeq.flatMap { p =>
+      graft.core.Staging.streamDirsThisRun.asScala.toSeq.flatMap { p =>
         val d = new java.io.File(p)
         val f = new java.io.File(d, "_SETUP_SECONDS")
         if (!f.isFile) None

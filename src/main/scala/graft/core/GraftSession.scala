@@ -28,12 +28,35 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // restore the sorted-bucket scan ordering (off by default since
       // 3.1): Spark still guards it with one-file-per-bucket, which
-      // bucketedStaged guarantees by pre-repartitioning on the bucket
+      // Staging.bucketed guarantees by pre-repartitioning on the bucket
       // hash — so a bucketed+sorted fact-fact join elides the SORT as
       // well as the exchange (BucketingSpec pins both)
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.ui.enabled", "false")
+
+  /** Cores for a main's session: `SPARK_GRAFT_CPUS` when set (it must
+    * be a positive integer), else every available processor.
+    */
+  lazy val mainCpus: Int = sys.env.get("SPARK_GRAFT_CPUS") match {
+    case None => Runtime.getRuntime.availableProcessors()
+    case Some(v) =>
+      val n = v.trim.toIntOption.getOrElse(0)
+      require(n > 0, s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
+      n
+  }
+
+  /** The session every main (Bench, Verify, the tools) runs on:
+    * `local[mainCpus]` with shuffle partitions = cores.
+    */
+  def forMain(appName: String): SparkSession = {
+    val spark = tuned(
+      SparkSession.builder().master(s"local[$mainCpus]").appName(appName),
+      shufflePartitions = mainCpus
+    ).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Local session for tests and ad-hoc runs. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors() - 1,

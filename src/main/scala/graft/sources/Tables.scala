@@ -280,11 +280,18 @@ object Tables {
     */
   def writeZOrdered(df: DataFrame, path: String, xCol: String,
                     yCol: String, numFiles: Int, bits: Int = 16): Unit =
+    zOrdered(df, xCol, yCol, numFiles, bits)
+      .write.mode("overwrite").parquet(path)
+
+  /** `df` placed for a [[writeZOrdered]] layout, for callers that own
+    * the write.
+    */
+  def zOrdered(df: DataFrame, xCol: String, yCol: String, numFiles: Int,
+               bits: Int = 16): DataFrame =
     df.withColumn("_z", zValue(df.col(xCol), df.col(yCol), bits))
       .repartitionByRange(numFiles, col("_z"))
       .sortWithinPartitions(col("_z"))
       .drop("_z")
-      .write.mode("overwrite").parquet(path)
 
   /** Per-file statistics report for a parquet directory: row count and
     * min/max of the named columns per physical file — what the scan

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, LogicalPlan, ResolvedHint}
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -23,7 +22,7 @@ object BroadcastProbe {
   def main(args: Array[String]): Unit = {
     val small = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val big = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = graft.core.GraftSession.local(8, "graft-broadcast-probe")
+    val spark = graft.core.GraftSession.forMain("graft-broadcast-probe")
 
     def hintsOf(plan: LogicalPlan): Seq[ResolvedHint] =
       plan.collect {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the row count of named SparkEntry queries at a
   * given SF — the cheapest way to see whether a candidate-generation
   * stage is output-bound (pairs ≈ results) or junk-bound (pairs ≫
@@ -10,27 +8,9 @@ import org.apache.spark.sql.SparkSession
   */
 object CountQ {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.GraftSession.tuned(
-      SparkSession.builder().master("local[32]").appName("countq"), 32)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.forMain("countq")
     args(1).split(',').foreach { name =>
-      // exact match, then the canonical short qNN name (the
-      // underscore-boundary form every bench artifact uses — unique by
-      // key convention, so 'q29' means q29_fingerprint, never q290+),
-      // then a raw prefix only if UNIQUE — Map-iteration-order picks
-      // were nondeterministic (ADVICE r15)
-      val keys = graft.SparkEntry.queries.keys.toSeq
-      val full = keys.find(_ == name)
-        .orElse(keys.find(_.takeWhile(_ != '_') == name))
-        .getOrElse {
-          keys.filter(_.startsWith(name)) match {
-            case Seq(one) => one
-            case Seq() => sys.error(s"no query matches $name")
-            case many => sys.error(
-              s"ambiguous prefix $name: ${many.sorted.mkString(", ")}")
-          }
-        }
+      val full = graft.SparkEntry.resolve(name)
       val n = graft.SparkEntry.queries(full)(spark, args(0)).count()
       println(s"COUNT $full = $n")
     }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for a LIST of SparkEntry
   * queries into one file each — the batch ExplainQ (one JVM/session
   * amortized over the list, same session config as Bench).
@@ -12,22 +10,11 @@ object ExplainMany {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 2) args(2) else "plans/r17"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "after")
-    val spark = graft.core.GraftSession.tuned(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-explain"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.forMain("graft-explain")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
-      // exact short-prefix resolution (ADVICE r17): startsWith("q1")
-      // matched q100..q199 in arbitrary map order and could write the
-      // wrong query's plan under the requested file name
-      val full = graft.SparkEntry.queries.keys
-        .find(k => k == name || k.takeWhile(_ != '_') == name)
-        .getOrElse(sys.error(s"no query named $name (exact qNN or full " +
-          s"name required)"))
+      val full = graft.SparkEntry.resolve(name)
       val txt = graft.SparkEntry.queries(full)(spark, sfDir)
         .queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

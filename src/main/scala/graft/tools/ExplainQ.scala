@@ -1,16 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the executed plan of one SparkEntry query.
   * Usage: runMain graft.tools.ExplainQ <query_name> <sf_dir>
   */
 object ExplainQ {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.GraftSession.tuned(
-      SparkSession.builder().master("local[8]").appName("explain"), 8).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val q = graft.SparkEntry.queries(args(0))(spark, args(1))
+    val spark = graft.core.GraftSession.forMain("explain")
+    val q = graft.SparkEntry.queries(graft.SparkEntry.resolve(args(0)))(
+      spark, args(1))
     println(q.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
     spark.stop()

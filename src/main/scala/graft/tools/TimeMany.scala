@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time a LIST of SparkEntry queries in one JVM:
   * `runMain graft.tools.TimeMany <q1,q2,...> <sfDir> [passes]`.
   * One line per query: `[timemany] <name> min=<s> rows=<n>` — the
@@ -23,17 +21,12 @@ import org.apache.spark.sql.SparkSession
 object TimeMany {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
+      .map(graft.SparkEntry.resolve)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val useNoop = sys.env.get("SPARK_GRAFT_TIMEMANY_ACTION").contains("noop")
-    val spark = graft.core.GraftSession.tuned(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-timemany"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def q(name: String) = graft.SparkEntry.queries.getOrElse(name,
-      sys.error(s"unknown query $name"))
+    val spark = graft.core.GraftSession.forMain("graft-timemany")
+    def q(name: String) = graft.SparkEntry.queries(name)
     names.headOption.foreach { n =>
       q(n)(spark, sfDir).count() // untimed session warm-up (JIT, codegen)
       println(s"[timemany] warmup $n done")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time a single SparkEntry query: `runMain graft.tools.TimeQ <name> <sfDir>
   * [passes]`. Same session config as Bench (local[SPARK_GRAFT_CPUS],
   * shuffle partitions = cores); prints per-pass seconds and the min —
@@ -17,17 +15,11 @@ import org.apache.spark.sql.SparkSession
   */
 object TimeQ {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val name = graft.SparkEntry.resolve(args(0))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.tuned(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-timeq"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fn = graft.SparkEntry.queries.getOrElse(name,
-      sys.error(s"unknown query $name; known: ${graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
+    val spark = graft.core.GraftSession.forMain("graft-timeq")
+    val fn = graft.SparkEntry.queries(name)
     val noopWrite = sys.env.get("SPARK_GRAFT_TIME_ACTION").contains("write")
     // SPARK_GRAFT_TIME_SWEEP=1 clears all cached frames before each pass
     // after the first — reproducing Bench's COLD protocol (warm JVM,

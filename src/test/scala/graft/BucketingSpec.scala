@@ -81,10 +81,10 @@ class BucketingSpec extends SparkTestBase {
     val prior = spark.conf.get(key)
     try {
       spark.conf.set(key, "-1")
-      val li = SparkEntry.bucketedStaged(spark, sf, "lineitem",
+      val li = graft.core.Staging.bucketed(spark, sf, "lineitem",
         Seq("l_orderkey", "l_extendedprice", "l_discount"),
         "l_orderkey", buckets = 8, tag = "q108li")
-      val ord = SparkEntry.bucketedStaged(spark, sf, "orders",
+      val ord = graft.core.Staging.bucketed(spark, sf, "orders",
         Seq("o_orderkey", "o_orderpriority"),
         "o_orderkey", buckets = 8, tag = "q108ord")
       val joined = li.join(ord, li("l_orderkey") === ord("o_orderkey"))

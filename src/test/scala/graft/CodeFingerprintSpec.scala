@@ -2,21 +2,22 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Staging
+
 /** Pins the staleness-defense contract of the staged-stream code
-  * fingerprint (VERDICT r11 #2 / ADVICE r11): the digest that keys
-  * staged stream outputs must cover BOTH `SparkEntry$` (the five
-  * stream queries' closures) and every `graft.streaming` class
-  * (where windowedCounts / purchaseClickPairs / materialize* / the
-  * watermark choices live), so an EventStreams-only transform edit
-  * recompiles to different bytecode → different fingerprint →
-  * different staging key → honest re-run instead of silently served
-  * pre-change output.
+  * fingerprint: the digest that keys staged stream outputs must cover
+  * both `SparkEntry$` (the stream queries' closures) and every
+  * `graft.streaming` class (where windowedCounts / purchaseClickPairs /
+  * materialize* / the watermark choices live), so an EventStreams-only
+  * transform edit recompiles to different bytecode → different
+  * fingerprint → different staging key → honest re-run instead of
+  * silently served pre-change output.
   */
 class CodeFingerprintSpec extends AnyFunSuite {
 
   test("fingerprint parts cover SparkEntry AND the streaming package " +
     "with real bytecode") {
-    val parts = SparkEntry.fingerprintParts
+    val parts = Staging.fingerprintParts
     val byName = parts.toMap
     assert(byName.contains("graft/SparkEntry$.class"))
     assert(byName("graft/SparkEntry$.class").nonEmpty)
@@ -28,7 +29,7 @@ class CodeFingerprintSpec extends AnyFunSuite {
 
   test("an EventStreams-only bytecode change changes the fingerprint " +
     "(and so the staging key)") {
-    val parts = SparkEntry.fingerprintParts
+    val parts = Staging.fingerprintParts
     val idx = parts.indexWhere(p =>
       p._1.startsWith("graft/streaming/") && p._2.nonEmpty)
     assert(idx >= 0)
@@ -37,16 +38,16 @@ class CodeFingerprintSpec extends AnyFunSuite {
       val c = b.clone(); c(c.length / 2) = (c(c.length / 2) ^ 0x01).toByte
       (n, c)
     })
-    assert(SparkEntry.fingerprintOf(parts) !=
-      SparkEntry.fingerprintOf(mutated))
+    assert(Staging.fingerprintOf(parts) !=
+      Staging.fingerprintOf(mutated))
   }
 
   test("fingerprint is deterministic and sensitive to a class RENAME") {
-    val parts = SparkEntry.fingerprintParts
-    assert(SparkEntry.fingerprintOf(parts) ==
-      SparkEntry.fingerprintOf(parts))
+    val parts = Staging.fingerprintParts
+    assert(Staging.fingerprintOf(parts) ==
+      Staging.fingerprintOf(parts))
     val renamed = parts.updated(0, ("renamed.class", parts(0)._2))
-    assert(SparkEntry.fingerprintOf(parts) !=
-      SparkEntry.fingerprintOf(renamed))
+    assert(Staging.fingerprintOf(parts) !=
+      Staging.fingerprintOf(renamed))
   }
 }

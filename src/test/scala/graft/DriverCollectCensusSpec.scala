@@ -48,7 +48,10 @@ class DriverCollectCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
         "head() on a 1-row agg(max,max) key-bound probe")),
     "graft/tools/MakeTenX.scala" -> ((2,
       "corpus-scaling tool (not a query path): two head() reads of " +
-        "1-row agg(max) key bounds used to offset replicated keys")))
+        "1-row agg(max) key bounds used to offset replicated keys")),
+    "graft/core/Staging.scala" -> ((1,
+      "the staged PQ codebook read: m×k centroid rows of dsub doubles, " +
+        "corpus-independent")))
 
   private val matPattern =
     "\\.(?:collect|collectAsList|toLocalIterator|head|first)\\(\\)".r
@@ -59,8 +62,8 @@ class DriverCollectCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
     * guessing, every argful site is COUNT-PINNED per file. All 14
     * current sites are Scala-collection receivers (reviewed this
     * round): Bench's top-10 sort of an in-driver seconds list,
-    * SparkEntry's string/byte-array prefixes (PGM/WAV fixture
-    * synthesis, digest hex, a temp-file name), MakeTenX's alphabet
+    * SparkEntry's PGM/WAV fixture-text prefixes, Staging's digest hex
+    * and sibling-name prefixes, MakeTenX's alphabet
     * rotation, BroadcastProbe's schema-name label, and the top-k
     * aggregators' bounded buffer merges. ZERO are Dataset-typed — a
     * Dataset take(n) ships n rows to the driver and would need a
@@ -73,9 +76,11 @@ class DriverCollectCensusSpec extends org.scalatest.funsuite.AnyFunSuite {
       "top-10 selection over the in-driver per-query seconds list; " +
         "failedAll.take(5) — first five names from the in-driver " +
         "failed-query Seq[String] for the broken-run stderr message")),
-    "graft/SparkEntry.scala" -> ((5,
-      "string/byte-array prefixes: PGM/WAV fixture text (2), digest " +
-        "hex truncations (2), a UUID temp-file suffix (1)")),
+    "graft/SparkEntry.scala" -> ((2,
+      "string/byte-array prefixes: PGM/WAV fixture text (2)")),
+    "graft/core/Staging.scala" -> ((3,
+      "byte-array/string prefixes: digest hex truncations (2), a UUID " +
+        "sibling-dir suffix (1)")),
     "graft/tools/MakeTenX.scala" -> ((1,
       "alphabet-string rotation for replica text mutation")),
     "graft/tools/BroadcastProbe.scala" -> ((1,

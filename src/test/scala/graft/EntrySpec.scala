@@ -16,13 +16,24 @@ class EntrySpec extends SparkTestBase {
   }
 
   test("short qNN prefixes are unique across declared queries") {
-    // every bench artifact and CountQ's tiered resolution key on the
-    // short prefix ("q29" for q29_fingerprint); a duplicate would emit
-    // colliding JSON keys in Bench's per-query maps and silently
-    // reintroduce nondeterministic name resolution (ADVICE r16)
+    // every bench artifact and SparkEntry.resolve key on the short
+    // prefix ("q29" for q29_fingerprint); a duplicate would emit
+    // colliding JSON keys in Bench's per-query maps and make a short
+    // name ambiguous
     val dup = SparkEntry.queries.keys.toSeq
       .groupBy(_.takeWhile(_ != '_')).filter(_._2.size > 1)
     assert(dup.isEmpty, s"duplicate short prefixes: $dup")
+  }
+
+  test("resolve maps every short qNN name to its key and never a raw " +
+    "prefix") {
+    SparkEntry.queries.keys.foreach { k =>
+      assert(SparkEntry.resolve(k) === k)
+      assert(SparkEntry.resolve(k.takeWhile(_ != '_')) === k)
+    }
+    // "q1" is a prefix of q10..q19 and q100..q199, never their name
+    val e = intercept[NoSuchElementException](SparkEntry.resolve("q1"))
+    assert(e.getMessage.contains("q10_"), "failure lists no candidates")
   }
 
   // The co-engagement graph family is legitimately EMPTY at sf0.001:
@@ -57,7 +68,7 @@ class EntrySpec extends SparkTestBase {
     // the same fingerprint — /tmp persists)
     var builds = 0
     def call() =
-      SparkEntry.stagedFrame(spark, sf, "documents", "spec_stage_probe") {
+      graft.core.Staging.frame(spark, sf, "documents", "spec_stage_probe") {
         builds += 1
         sources.Tables.load(spark, sf, "documents")
           .select(org.apache.spark.sql.functions.col("doc_id")).limit(5)

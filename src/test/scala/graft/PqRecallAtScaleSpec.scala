@@ -6,7 +6,7 @@ import graft.ext.Similarity
 /** Bench-scale recall for the PQ/IVF-PQ family (q85/q95) — the same
   * promotion the LSH family got in LshRecallSpec: the fixture-scale
   * SimilaritySpec pins recall on sf0.001; this spec measures the
-  * SHIPPED staged codebook (SparkEntry.pqTrainStaged, the exact model
+  * SHIPPED staged codebook (Staging.pqCodebook, the exact model
   * q85/q95 serve) against exact brute force at sf0.1, over a 50-query
   * sample rather than q85's 5 declared queries, so codebook quality is
   * evidenced at the scale the bench runs at. Gated on the bench corpus
@@ -25,7 +25,7 @@ class PqRecallAtScaleSpec extends SparkTestBase {
     val emb = graft.sources.Tables.load(spark, sfBench, "embeddings")
     // 50 queries spread across the id space — a measurement, not a probe
     val queries = emb.filter($"vec_id" % 40 === 0)
-    val model = SparkEntry.pqTrainStaged(spark, sfBench,
+    val model = graft.core.Staging.pqCodebook(spark, sfBench,
       m = 8, k = 16, maxIter = 5)
     val pq = Similarity.pqSearch(emb, model, queries, k = 10, rerank = 200)
     val exact = Similarity.bruteForceKnn(emb, queries, 10)
@@ -53,7 +53,7 @@ class PqRecallAtScaleSpec extends SparkTestBase {
     // the shipped q95 cell geometry: 8 centroids, nprobe 3
     val centroids = emb.filter($"vec_id" < 8)
       .select($"vec_id".as("centroid_id"), $"embedding".as("centroid"))
-    val model = SparkEntry.pqTrainStaged(spark, sfBench,
+    val model = graft.core.Staging.pqCodebook(spark, sfBench,
       m = 8, k = 16, maxIter = 5)
     val part = Similarity.ivfPqSearch(emb, centroids, model, queries,
       nprobe = 3, k = 10, rerank = 200)
